@@ -1013,6 +1013,7 @@ object Relational {
     // surface are pinned in ZOrderSpec.
     "q81_hilbert_log" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
       val root = TidyIO.scratchDir("q81_hlog")
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
@@ -1027,8 +1028,9 @@ object Relational {
         (graft.operators.ZOrder.hkey(col("xb"), col("yb"), 8) / lit(4096))
           .cast("long"),
         numFiles = 16, mode = "overwrite")
-      TableLog.readRangeMulti(s, root,
-          Seq(("xb", 30L, 70L), ("yb", 32L, 159L)))
+      TableLog.read(s, root, filters = Seq(
+          GreaterThanOrEqual("xb", 30L), LessThanOrEqual("xb", 70L),
+          GreaterThanOrEqual("yb", 32L), LessThanOrEqual("yb", 159L)))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("k")).as("n_keys"),
           sum("cents").as("sum_cents"))
@@ -1232,7 +1234,7 @@ object Relational {
     // can exclude. Drama: orders clustered by priority's first byte →
     // per-file prio zones are tight; a string RANGE read through the
     // API and a string EQUALITY through the DSv2 SQL surface both
-    // prune files (pruned=1 is the planFilesStr claim; exact file
+    // prune files (pruned=1 is the TableLog.plan claim; exact file
     // counts live in TableLogSpec/GraftLogDsvSpec) and both equal the
     // raw-orders recompute — bytewise order is what Spark's
     // UTF8String AND DuckDB's collation-free VARCHAR use, so the
@@ -1241,6 +1243,7 @@ object Relational {
     // file.
     "q83_string_zones" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
       val root = TidyIO.scratchDir("q83_strz")
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
@@ -1253,11 +1256,11 @@ object Relational {
       // file, tight single-value string zones, no phantom empty files
       TableLog.commit(o, root, ascii(substring(col("prio"), 1, 1)),
         5, "overwrite")
-      val (sel, total) = TableLog.planFilesStr(root,
-        Seq(("prio", "2-HIGH", "3-MEDIUM")))
+      val prioRange = Seq(GreaterThanOrEqual("prio", "2-HIGH"),
+        LessThanOrEqual("prio", "3-MEDIUM"))
+      val (sel, total) = TableLog.plan(root, prioRange)
       val pruned = if (sel.size < total) 1L else 0L
-      val range = TableLog.readRangeStr(s, root,
-          Seq(("prio", "2-HIGH", "3-MEDIUM")))
+      val range = TableLog.read(s, root, filters = prioRange)
         .agg(count(lit(1)).as("n"), sum("cents").as("sc")).collect()(0)
       s.read.format("graftlog").option("path", root).load()
         .createOrReplaceTempView("graft_strz")
@@ -1504,7 +1507,7 @@ object Relational {
     // but a point probe on a key the layout scattered (here 'u'||k
     // under a k-div layout — lexicographic order ≠ numeric order, so
     // every file's string zone is wide) still reads every
-    // zone-overlapping file; commitIndexed(bloomStrCols=…) hashes
+    // zone-overlapping file; commit(bloomStrCols=…) hashes
     // each value through the portable rolling hash into the SAME
     // 4-bit double-hashed bloom pipeline long columns use (one
     // manifest format, one probe, no false negatives by
@@ -1516,6 +1519,7 @@ object Relational {
     // manifest pass + the (few) bloom-positive files.
     "q89_string_bloom" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}
+      import org.apache.spark.sql.sources.EqualTo
       val root = TidyIO.scratchDir("q89_strbloom")
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
@@ -1527,14 +1531,14 @@ object Relational {
         // sizing rule the bloom docs prescribe, honored by the
         // query's own instance
         .withColumn("sk", concat(lit("u"), pmod(col("k"), lit(50000L))))
-      TableLog.commitIndexed(o, root, expr("k div 500"), 16, "overwrite",
+      TableLog.commit(o, root, expr("k div 500"), 16, "overwrite",
         bloomStrCols = Seq("sk"))
       val probe = "u" + (o.agg(max("k")).collect()(0).getLong(0) % 50000L)
-      val hit = TableLog.readPointStr(s, root, "sk", probe)
+      val hit = TableLog.read(s, root, filters = Seq(EqualTo("sk", probe)))
         .agg(count(lit(1)), sum("cents")).collect()(0)
       // an in-zone miss ('u33a' sorts between real keys): zero rows
       // through the pruned read, structurally
-      val nMiss = TableLog.readPointStr(s, root, "sk", "u33a").count()
+      val nMiss = TableLog.read(s, root, filters = Seq(EqualTo("sk", "u33a"))).count()
       val nSql = s.read.format("graftlog").option("path", root).load()
         .filter(col("sk") === probe).count()
       s.range(1).select(
@@ -1767,7 +1771,7 @@ object Relational {
     // constraint TableChange (the catalog advertises
     // SUPPORT_TABLE_CONSTRAINT) or the CALL twin, persisted in the
     // manifest header, carried forward by every commit, and enforced
-    // on EVERY write path (commitChecked's R71 shape was per-call
+    // on EVERY write path (R71's first shape took per-call
     // arguments — the round-14 missing-item 4). The query certifies:
     // declaration validates existing rows, a violating MERGE and a
     // violating streaming-sink batch both reject LOUDLY naming the
@@ -2019,8 +2023,7 @@ object Relational {
       TableLog.dropColumn(root, "prio")
       // zone probes translate through the mapping: a range on the
       // RENAMED column still prunes files zoned under the old name
-      val (sel, total) = TableLog.planFilesMulti(root,
-        Seq(("k", 1L, 400L)))
+      val (sel, total) = TableLog.planFiles(root, "k", 1L, 400L)
       val v0 = TableLog.read(s, root, Some(0L))
         .agg(sum("cents")).collect()(0)
       TableLog.read(s, root)
@@ -2251,6 +2254,7 @@ object Relational {
     // TableLogSpec.
     "q72_bloom_skip" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}
+      import org.apache.spark.sql.sources.EqualTo
       val root = TidyIO.scratchDir("q72_bloom")
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
@@ -2258,13 +2262,13 @@ object Relational {
           expr("CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT)")
             .as("cents"))
         .filter(col("k").isNotNull)
-      TableLog.commitIndexed(o, root, expr("cust div 100"), numFiles = 16,
+      TableLog.commit(o, root, expr("cust div 100"), numFiles = 16,
         mode = "overwrite", bloomCols = Seq("k"))
       // bounded driver lookup: the probe key (1 row)
       val maxK = o.agg(max("k")).collect()(0).getLong(0)
-      val hit = TableLog.readPoint(s, root, "k", maxK)
+      val hit = TableLog.read(s, root, filters = Seq(EqualTo("k", maxK)))
         .agg(count(lit(1)).as("n_hit"), sum("cents").as("hit_cents"))
-      val nMiss = TableLog.readPoint(s, root, "k", maxK + 1L).count()
+      val nMiss = TableLog.read(s, root, filters = Seq(EqualTo("k", maxK + 1L))).count()
       hit.select(col("n_hit"), col("hit_cents"), lit(nMiss).as("n_miss"))
     }),
 
@@ -2283,6 +2287,7 @@ object Relational {
     // files, z plan strictly fewer) is pinned in TableLogSpec.
     "q70_recluster" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
       val root = TidyIO.scratchDir("q70_recluster")
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
@@ -2297,8 +2302,9 @@ object Relational {
         (graft.operators.ZOrder.zkey(col("xb"), col("yb"), 8) / lit(4096))
           .cast("long"), numFiles = 16)
       Seq(("v0_scattered", 0L), ("v1_zordered", 1L)).map { case (nm, v) =>
-        TableLog.readRangeMulti(s, root,
-            Seq(("xb", 40L, 90L), ("yb", 64L, 191L)), asOf = Some(v))
+        TableLog.read(s, root, Some(v), Seq(
+            GreaterThanOrEqual("xb", 40L), LessThanOrEqual("xb", 90L),
+            GreaterThanOrEqual("yb", 64L), LessThanOrEqual("yb", 191L)))
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("k")).as("n_keys"),
             sum("cents").as("sum_cents"))
@@ -2313,7 +2319,7 @@ object Relational {
     // that violate declared BUSINESS rules, Delta's ALTER TABLE ADD
     // CONSTRAINT): orders are split on the declared rule (cents in
     // (0, 2·10⁷] — high-value orders violate deterministically), the
-    // clean subset commits through commitChecked, the violating rows
+    // clean subset commits through commit(checks = …), the violating rows
     // land in a quarantine relation, and a commit of the UNSPLIT
     // batch is attempted and must be REJECTED with the store left
     // bit-identical (zero data/manifest IO before validation). The
@@ -2335,16 +2341,16 @@ object Relational {
       val ok = col("cents") > 0L && col("cents") <= 20000000L
       val clean = o.filter(ok)
       val quarantined = o.filter(!ok)
-      TableLog.commitChecked(clean, root, expr("k div 500"), 4,
-        "overwrite", checks)
+      TableLog.commit(clean, root, expr("k div 500"), 4,
+        "overwrite", checks = checks)
       // the dirty batch carries a sentinel violator (k=-1, cents=-5)
       // so the rejection is certified on EVERY corpus instance, even
       // one whose natural rows all satisfy the rule
       val dirty = o.unionByName(
         s.range(1).select(lit(-1L).as("k"), lit(-5L).as("cents")))
       val rejected =
-        try { TableLog.commitChecked(dirty, root, expr("k div 500"), 4,
-          "append", checks); 0L }
+        try { TableLog.commit(dirty, root, expr("k div 500"), 4,
+          "append", checks = checks); 0L }
         catch { case _: IllegalArgumentException => 1L }
       TableLog.read(s, root)
         .agg(count(lit(1)).as("n_clean"), sum("cents").as("sum_clean"))
@@ -2362,13 +2368,14 @@ object Relational {
     // 4096 — 16 files, each a Morton TILE whose per-file zones are
     // tight in BOTH dimensions (a single-key layout is tight in one,
     // 0..255-wide in the other) — and the read resolves a 2-D range
-    // via planFilesMulti's conjunctive zone intersect BEFORE any
+    // via the conjunctive zone intersect of TableLog.prune BEFORE any
     // scan. Oracle recomputes the filtered aggregate from raw
     // orders, so a zone that wrongly drops a file surfaces as a
     // value diff; the file-count claims (multi-dim prune strictly
     // beats both single dimensions) are pinned in TableLogSpec.
     "q68_zorder_log" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
       val root = TidyIO.scratchDir("q68_zlog")
       val o = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
@@ -2384,8 +2391,9 @@ object Relational {
         (graft.operators.ZOrder.zkey(col("xb"), col("yb"), 8) / lit(4096))
           .cast("long"),
         numFiles = 16, mode = "overwrite")
-      TableLog.readRangeMulti(s, root,
-          Seq(("xb", 40L, 90L), ("yb", 64L, 191L)))
+      TableLog.read(s, root, filters = Seq(
+          GreaterThanOrEqual("xb", 40L), LessThanOrEqual("xb", 90L),
+          GreaterThanOrEqual("yb", 64L), LessThanOrEqual("yb", 191L)))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("k")).as("n_keys"),
           sum("cents").as("sum_cents"))

@@ -449,7 +449,7 @@ object StreamQueries {
         // txn guard = exactly-once: foreachBatch re-delivers a batch
         // with the SAME id on recovery, and re-merging the same delta
         // would double-count — skip ids at or below the store's
-        // high-water mark (TableLog.commitTxn's contract, inlined
+        // high-water mark (TableLog.commit's txnTag contract, inlined
         // here because the MV refresh commits mode=overwrite).
         if (!batch.isEmpty &&
             id > graft.sources.TableLog.lastTxn(root, "st25")) {
@@ -536,7 +536,7 @@ object StreamQueries {
     // S24/st26: exactly-once streaming APPEND ingest into the R67/R69
     // commit log — the Delta-sink shape: each micro-batch lands as a
     // transactional TableLog version stamped with its batch id
-    // (commitTxn; delta manifests past the checkpoint interval), and
+    // (commit with txnTag; delta manifests past the checkpoint interval), and
     // a RE-DELIVERED batch — foreachBatch re-runs a batch with the
     // same id on recovery — is a content-exact no-op because its txn
     // is at or below the store's per-app high-water mark. The query
@@ -560,13 +560,13 @@ object StreamQueries {
         .option("maxFilesPerTrigger", "1").parquet(src)
       StreamRun.runForeachBatch(s, stream) { (batch, id) =>
         if (!batch.isEmpty)
-          TableLog.commitTxn(batch, root, layout, numFiles = 2,
-            appId = "st26", txn = id, checkpointInterval = 4)
+          TableLog.commit(batch, root, layout, numFiles = 2,
+            checkpointInterval = 4, txnTag = Some(s"st26:$id"))
       }
       // failure-recovery path: batch 0 re-delivered after the run —
       // MUST be skipped by the txn high-water mark
-      TableLog.commitTxn(o, root, layout, numFiles = 2,
-        appId = "st26", txn = 0L, checkpointInterval = 4)
+      TableLog.commit(o, root, layout, numFiles = 2,
+        checkpointInterval = 4, txnTag = Some("st26:0"))
       TableLog.read(s, root)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("k")).as("n_keys"),
@@ -578,7 +578,7 @@ object StreamQueries {
     // S31/st33: the NATIVE streaming sink — `writeStream
     // .format("graftlog")` with ZERO user code (st26 certified the
     // same exactly-once contract but hand-wired foreachBatch +
-    // commitTxn; Delta ships a real Sink so `.writeStream` just
+    // a txnTag commit; Delta ships a real Sink so `.writeStream` just
     // works — round-13 missing-item 2). The engine drives each
     // micro-batch through GraftLogSink.addBatch → TableLog.commit
     // stamped `appId:batchId`, so the post-run re-delivery of batch 0

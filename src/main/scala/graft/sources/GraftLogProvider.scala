@@ -13,6 +13,8 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import scala.util.control.NonFatal
+
 /** R78/q76 — the SQL surface for the commit log: a DataSource V2
   * `TableProvider` so the store mounts at the same entry point every
   * other source uses (`spark.read.format("graftlog")`, registered
@@ -36,13 +38,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `pushedFilters` (the plan's `PushedFilters: [...]`) but returns
   * EVERY filter as residual, so Spark re-applies them row-level above
   * the scan — a false-positive file read costs IO, never correctness.
-  * A filter prunes when it constrains a LONG column the manifest
-  * zones (q61's skipping class): range predicates intersect the
-  * per-file [min,max] zone, equality and IN additionally probe the
-  * per-file bloom bitset when one rides the manifest (q72's class —
-  * no false negatives by construction), `IsNotNull` drops all-NULL
-  * chunks (absent zone on a long column means the file has no
-  * non-NULL value), and un-zoned files are kept conservatively.
+  * Which files a filter skips is the store's one pruning rule,
+  * [[TableLog.prune]] (shared with the API planner and reader):
+  * integral and STRING comparisons against the per-file zones,
+  * equality and IN additionally probing the per-file bloom (q72's
+  * class — no false negatives by construction), `IsNotNull` dropping
+  * all-NULL integral chunks, un-zoned files kept conservatively.
   * Column pruning flows through `pruneColumns` into the projection,
   * so the parquet scan reads only the required columns.
   *
@@ -139,7 +140,7 @@ class GraftLogProvider extends TableProvider with DataSourceRegister
 
   /** S31/st33 — the NATIVE streaming sink: `writeStream
     * .format("graftlog")` with no user code (st26/st30 hand-wired
-    * foreachBatch + commitTxn; Delta ships a real Sink for the same
+    * foreachBatch + a txnTag commit; Delta ships a real Sink for the same
     * reason). Spark's DataStreamWriter routes a StreamSinkProvider to
     * the DSv1 sink path even when the class is also a TableProvider,
     * so batch reads/writes keep the V2 surface. Exactly-once: each
@@ -345,8 +346,8 @@ object GraftLogProvider {
     new GraftLogTable(root, head, mounted)
   }
 
-  /** Last (selected, total) file plan — spec introspection only (the
-    * planFilesMulti return-pair contract surfaced through the SQL
+  /** Last executed (selected, total) file plan — spec introspection
+    * only (the [[TableLog.plan]] return pair surfaced through the SQL
     * path, where the pruned parquet scan is nested inside the
     * relation and invisible to the outer plan).
     */
@@ -524,7 +525,7 @@ private[sources] final class GraftLogScanBuilder(root: String, version: Long,
     * scan — our pushdown SKIPS FILES, it never claims row exactness.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftLogScan.prunable(f, colType))
+    pushed = filters.filter(f => TableLog.prunable(f, colType))
     filters
   }
 
@@ -546,8 +547,16 @@ private[sources] final class GraftLogScan(root: String, version: Long,
       s"pushed=[${pushed.mkString(", ")}]"
   override def toV1TableScan[T <: BaseRelation with TableScan](
       context: SQLContext): T =
-    new GraftLogRelation(context, root, version, required, pushed)
-      .asInstanceOf[T]
+    new GraftLogRelation(context, root, planned, required).asInstanceOf[T]
+
+  /** The manifest and the files the pushed filters keep — resolved and
+    * pruned ONCE per scan, shared by the statistics and the executed
+    * relation so both see the same version and the same file set.
+    */
+  private lazy val planned: (TableLog.Manifest, Seq[TableLog.FileEntry]) = {
+    val m = TableLog.readManifest(root, version)
+    (m, TableLog.prune(m, pushed.toSeq))
+  }
 
   /** PLANNER-native statistics (Delta reports the same pair): exact
     * live row count and on-disk bytes of the files the pushed filters
@@ -559,12 +568,10 @@ private[sources] final class GraftLogScan(root: String, version: Long,
     * reach the planner through [[org.apache.spark.sql.graftx
     * .V1ScanStatsJoinRule]], which unwraps the shim at each join.
     * Resolved lazily ONCE per scan (the rule's batch runs to fixed
-    * point) from the manifest — metadata-sized IO, never a data scan.
+    * point) from [[planned]] — metadata-sized IO, never a data scan.
     */
   private lazy val reported: Statistics = {
-    val m = TableLog.readManifest(root, version)
-    val sel = m.files.filter(f => pushed.forall(p =>
-      GraftLogScan.keeps(GraftLogScan.translate(p, m), f)))
+    val sel = planned._2
     val rows = sel.map(_.liveRows).sum
     val bytes = TableLog.dataBytes(root, sel)
     // COLUMN statistics from the ANALYZE artifact when one exists for
@@ -604,7 +611,7 @@ private[sources] final class GraftLogScan(root: String, version: Long,
               })
           }
         }
-      } catch { case _: Throwable => () } // stats stay advisory
+      } catch { case NonFatal(_) => () } // stats stay advisory
       out
     }
     new Statistics {
@@ -622,166 +629,22 @@ private[sources] final class GraftLogScan(root: String, version: Long,
   override def estimateStatistics(): Statistics = reported
 }
 
-private[sources] object GraftLogScan {
-  import org.apache.spark.sql.types.{DataType, StringType}
-
-  /** Rewrite a pushed filter's column names logical→physical (column
-    * mapping): zones/blooms are keyed by the PHYSICAL name. Only the
-    * shapes [[keeps]] understands need rewriting — anything else is
-    * conservatively kept anyway.
-    */
-  def translate(f: Filter, m: TableLog.Manifest): Filter =
-    if (m.colMap.isEmpty) f
-    else f match {
-      case EqualTo(c, v)            => EqualTo(m.physicalOf(c), v)
-      case GreaterThan(c, v)        => GreaterThan(m.physicalOf(c), v)
-      case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(m.physicalOf(c), v)
-      case LessThan(c, v)           => LessThan(m.physicalOf(c), v)
-      case LessThanOrEqual(c, v)    => LessThanOrEqual(m.physicalOf(c), v)
-      case In(c, vs)                => In(m.physicalOf(c), vs)
-      case IsNotNull(c)             => IsNotNull(m.physicalOf(c))
-      case And(l, r)                => And(translate(l, m), translate(r, m))
-      case other                    => other
-    }
-
-  /** Integral literal → Long; anything else is not zone-comparable
-    * (fractional comparisons against a long column are rewritten by
-    * Catalyst before pushdown, so integral is the only shape seen).
-    */
-  private def asLong(v: Any): Option[Long] = v match {
-    case b: java.lang.Byte    => Some(b.longValue)
-    case s: java.lang.Short   => Some(s.longValue)
-    case i: java.lang.Integer => Some(i.longValue)
-    case l: java.lang.Long    => Some(l.longValue)
-    case _                    => None
-  }
-
-  /** Can this filter exclude FILES from the manifest alone? LONG
-    * columns prune through the integral zones (+ blooms); STRING
-    * columns through the truncated string zones (q83's class —
-    * source/lang/domain predicates over a text corpus). IsNotNull
-    * prunes only on longs: an absent integral zone proves all-NULL,
-    * an absent STRING zone doesn't (parquet's binary-stats size cap).
-    */
-  def prunable(f: Filter, colType: String => Option[DataType]): Boolean = {
-    def longCol(c: String) = colType(c).contains(LongType)
-    def strCol(c: String) = colType(c).contains(StringType)
-    def cmpable(c: String, v: Any) =
-      (longCol(c) && asLong(v).isDefined) ||
-        (strCol(c) && v.isInstanceOf[String])
-    f match {
-      case EqualTo(c, v)            => cmpable(c, v)
-      case GreaterThan(c, v)        => cmpable(c, v)
-      case GreaterThanOrEqual(c, v) => cmpable(c, v)
-      case LessThan(c, v)           => cmpable(c, v)
-      case LessThanOrEqual(c, v)    => cmpable(c, v)
-      case In(c, vs)                => vs.nonEmpty && vs.forall(cmpable(c, _))
-      case IsNotNull(c)             => longCol(c)
-      case And(l, r) => prunable(l, colType) && prunable(r, colType)
-      case _         => false
-    }
-  }
-
-  /** May file `e` contain a row satisfying `f`? Long-zone semantics
-    * match [[TableLog.planFilesMulti]] (absent integral zone on the
-    * filtered column = all-NULL chunk) with equality adding
-    * [[TableLog.planFilesPoint]]'s bloom probe; string semantics are
-    * [[TableLog.strZoneKeeps]]'s truncation-safe compare (the stored
-    * min is a hard lower bound; a truncated max only excludes when
-    * the probe's own prefix sorts above it; absent keeps).
-    */
-  def keeps(f: Filter, e: TableLog.FileEntry): Boolean = f match {
-    case EqualTo(c, v: String)            => strMayContain(e, c, v)
-    case GreaterThan(c, v: String)        => strAbove(e, c, v, strict = true)
-    case GreaterThanOrEqual(c, v: String) => strAbove(e, c, v, strict = false)
-    case LessThan(c, v: String)           => strBelow(e, c, v, strict = true)
-    case LessThanOrEqual(c, v: String)    => strBelow(e, c, v, strict = false)
-    case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-      vs.exists(v => strMayContain(e, c, v.asInstanceOf[String]))
-    case EqualTo(c, v)            => mayContain(e, c, asLong(v).get)
-    case GreaterThan(c, v)        => e.zMax.get(c).exists(_ > asLong(v).get)
-    case GreaterThanOrEqual(c, v) => e.zMax.get(c).exists(_ >= asLong(v).get)
-    case LessThan(c, v)           => e.zMin.get(c).exists(_ < asLong(v).get)
-    case LessThanOrEqual(c, v)    => e.zMin.get(c).exists(_ <= asLong(v).get)
-    case In(c, vs)                => vs.exists(v => mayContain(e, c, asLong(v).get))
-    case IsNotNull(c)             => e.zMin.contains(c)
-    case And(l, r)                => keeps(l, e) && keeps(r, e)
-    case _                        => true
-  }
-
-  /** May `e` hold a row of `c` ABOVE `v`? True max ≥ stored max; when
-    * the stored max is truncated it is a strict prefix of the true
-    * max (so the true max sorts above it), and only a probe whose own
-    * prefix sorts above the stored prefix is provably beyond it.
-    */
-  private def strAbove(e: TableLog.FileEntry, c: String, v: String,
-                       strict: Boolean): Boolean =
-    (e.sMax.get(c), e.sMaxTrunc(c)) match {
-      case (Some(zhi), true)  => TableLog.truncMaxKeeps(v, zhi)
-      case (Some(zhi), false) =>
-        if (strict) TableLog.cmpUtf8(zhi, v) > 0 else TableLog.cmpUtf8(zhi, v) >= 0
-      case _ => true // un-zoned string column: keep (stats size cap)
-    }
-
-  /** May `e` hold a row of `c` BELOW `v`? The stored min is ≤ the
-    * true min regardless of truncation, so min ≥ v excludes exactly.
-    */
-  private def strBelow(e: TableLog.FileEntry, c: String, v: String,
-                       strict: Boolean): Boolean =
-    e.sMin.get(c) match {
-      case Some(zlo) =>
-        if (strict) TableLog.cmpUtf8(zlo, v) < 0 else TableLog.cmpUtf8(zlo, v) <= 0
-      case None => true // un-zoned string column: keep
-    }
-
-  /** String equality probe: truncation-safe zone check plus the
-    * string bloom (rolling-hashed value) when one rides the manifest
-    * — [[TableLog.planFilesPointStr]]'s rule, shared.
-    */
-  private def strMayContain(e: TableLog.FileEntry, c: String, v: String): Boolean =
-    // probe only manifest-TAGGED string blooms — a bloom built via the
-    // long path over numeric-looking strings holds differently-keyed
-    // bits; probing it with the rolling-hash key would silently return
-    // empty results (TableLog.planFilesPointStr's rule, shared)
-    TableLog.strZoneKeeps(e, c, v, v) && (e.blooms.get(c) match {
-      case Some(bits) if e.strBlooms(c) =>
-        TableLog.bloomPositions(TableLog.strBloomKey(v), bits.length * 64)
-          .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-      case _ => true
-    })
-
-  private def mayContain(e: TableLog.FileEntry, c: String, v: Long): Boolean = {
-    val zoneOk = (e.zMin.get(c), e.zMax.get(c)) match {
-      case (Some(lo), Some(hi)) => lo <= v && v <= hi
-      case _                    => false
-    }
-    zoneOk && (e.blooms.get(c) match {
-      case Some(bits) if !e.strBlooms(c) =>
-        TableLog.bloomPositions(v, bits.length * 64)
-          .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-      case _ => true
-    })
-  }
-}
-
-/** The executed scan: plan files from the manifest under the pushed
-  * filters, then delegate to the store's one true read path (manifest
+/** The executed scan: the scan's shared (manifest, kept files) plan,
+  * delegated to the store's one true read path (manifest
   * DDL + DV suppression + vectorized parquet) projected to the pruned
   * columns. `buildScan` runs driver-side at execution planning; the
   * returned RDD is the parquet scan itself — nothing is collected.
   */
 private[sources] final class GraftLogRelation(ctx: SQLContext, root: String,
-                                              version: Long,
-                                              required: StructType,
-                                              pushed: Array[Filter])
+                                              planned: (TableLog.Manifest,
+                                                Seq[TableLog.FileEntry]),
+                                              required: StructType)
     extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = ctx
   override def schema: StructType = required
 
   override def buildScan(): RDD[Row] = {
-    val m = TableLog.readManifest(root, version)
-    val sel = m.files.filter(f => pushed.forall(p =>
-      GraftLogScan.keeps(GraftLogScan.translate(p, m), f)))
+    val (m, sel) = planned
     GraftLogProvider.lastScanPlan = (sel.size, m.files.size)
     val df = TableLog.readFiles(ctx.sparkSession, root, m, sel)
     val projected =

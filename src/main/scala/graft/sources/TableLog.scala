@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual,
+  In, IsNotNull, LessThan, LessThanOrEqual}
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -263,13 +265,175 @@ object TableLog {
 
   /** The 4 bit positions of `v` — h1/h2 are REDUCED before combining
     * so the arithmetic never overflows under ANSI; the Column-side
-    * build in [[commitIndexed]] mirrors this expression exactly.
+    * build in [[withBlooms]] mirrors this expression exactly.
     */
   private[graft] def bloomPositions(v: Long, mBits: Int): Array[Int] = {
     val f = org.apache.spark.sql.graftx.Fmix64
     val p1 = java.lang.Math.floorMod(f.fmix(v), mBits.toLong).toInt
     val p2 = (java.lang.Math.floorMod(f.fmix(v ^ bloomGold), (mBits - 3).toLong) + 1L).toInt
     Array.tabulate(4)(i => ((p1.toLong + i.toLong * p2) % mBits).toInt)
+  }
+
+  /** The 4-bit probe: false only when `e` carries a bloom for `c` built
+    * by the probe's scheme (string-hashed vs long) and a bit is unset.
+    * A bloom of the OTHER scheme holds differently-keyed bits for the
+    * same logical value (a long-path bloom over numeric-looking
+    * strings, say) — probing it would silently false-negative, so the
+    * file keeps instead; un-indexed files keep too (mixed old/new
+    * tables stay correct while the index backfills).
+    */
+  private def bloomKeeps(e: FileEntry, c: String, key: Long, strScheme: Boolean): Boolean =
+    e.blooms.get(c) match {
+      case Some(bits) if e.strBlooms(c) == strScheme =>
+        bloomPositions(key, bits.length * 64)
+          .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
+      case _ => true
+    }
+
+  // ---- file pruning: the one rule ---------------------------------------
+  // Which files may hold a row matching a conjunction of data-source
+  // Filters, decided from the manifest alone. The API planner ([[plan]]),
+  // the API reader ([[read]]) and the SQL scan (GraftLogScan) all apply
+  // it through [[prune]]. A kept file may still hold no match (the row
+  // predicate re-applies above the scan); an excluded file provably
+  // holds none. Integral columns prune through the integral zones plus
+  // the long bloom; STRING columns through the truncated string zones
+  // plus the string bloom.
+
+  /** Rewrite a filter's column names logical→physical (column mapping):
+    * zones/blooms are keyed by the PHYSICAL name. Only the shapes
+    * [[keeps]] understands need rewriting — anything else is
+    * conservatively kept anyway.
+    */
+  private[sources] def translate(f: Filter, m: Manifest): Filter =
+    if (m.colMap.isEmpty) f
+    else f match {
+      case EqualTo(c, v)            => EqualTo(m.physicalOf(c), v)
+      case GreaterThan(c, v)        => GreaterThan(m.physicalOf(c), v)
+      case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(m.physicalOf(c), v)
+      case LessThan(c, v)           => LessThan(m.physicalOf(c), v)
+      case LessThanOrEqual(c, v)    => LessThanOrEqual(m.physicalOf(c), v)
+      case In(c, vs)                => In(m.physicalOf(c), vs)
+      case IsNotNull(c)             => IsNotNull(m.physicalOf(c))
+      case And(l, r)                => And(translate(l, m), translate(r, m))
+      case other                    => other
+    }
+
+  /** Integral literal → Long; anything else is not zone-comparable
+    * (fractional comparisons against a long column are rewritten by
+    * Catalyst before pushdown; an API caller's fractional literal is
+    * simply not prunable).
+    */
+  private def asLong(v: Any): Option[Long] = v match {
+    case b: java.lang.Byte    => Some(b.longValue)
+    case s: java.lang.Short   => Some(s.longValue)
+    case i: java.lang.Integer => Some(i.longValue)
+    case l: java.lang.Long    => Some(l.longValue)
+    case _                    => None
+  }
+
+  /** Can this filter exclude FILES from the manifest alone? Only shapes
+    * [[keeps]] decides exactly: a comparison of an integral column
+    * (BIGINT/INT/SMALLINT/TINYINT — the footer stats zone them all as
+    * longs) with an integral literal or of a STRING column with a
+    * string literal, IN over such literals, IsNotNull on an integral
+    * column (an absent integral zone proves all-NULL; an absent STRING
+    * zone doesn't — parquet's binary-stats size cap), and AND of
+    * prunable sides. Everything else must keep every file, which
+    * [[prune]] guarantees by skipping it.
+    */
+  private[sources] def prunable(f: Filter,
+                                colType: String => Option[org.apache.spark.sql.types.DataType]): Boolean = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+    def longCol(c: String) =
+      colType(c).exists(Seq(LongType, IntegerType, ShortType, ByteType).contains(_))
+    def strCol(c: String) = colType(c).contains(StringType)
+    def cmpable(c: String, v: Any) =
+      (longCol(c) && asLong(v).isDefined) ||
+        (strCol(c) && v.isInstanceOf[String])
+    f match {
+      case EqualTo(c, v)            => cmpable(c, v)
+      case GreaterThan(c, v)        => cmpable(c, v)
+      case GreaterThanOrEqual(c, v) => cmpable(c, v)
+      case LessThan(c, v)           => cmpable(c, v)
+      case LessThanOrEqual(c, v)    => cmpable(c, v)
+      case In(c, vs)                => vs.nonEmpty && vs.forall(cmpable(c, _))
+      case IsNotNull(c)             => longCol(c)
+      case And(l, r) => prunable(l, colType) && prunable(r, colType)
+      case _         => false
+    }
+  }
+
+  /** May file `e` contain a row satisfying the PRUNABLE, physically
+    * named filter `f`? Long ranges intersect the integral zone (an
+    * absent zone on the filtered column = all-NULL chunk: no row can
+    * match); equality adds the long bloom probe. String semantics are
+    * [[strZoneKeeps]]'s truncation-safe compare (the stored min is a
+    * hard lower bound; a truncated max only excludes when the probe's
+    * own prefix sorts above it; absent keeps) plus the string bloom.
+    * Undefined on unprunable shapes — callers go through [[prune]].
+    */
+  private[sources] def keeps(f: Filter, e: FileEntry): Boolean = f match {
+    case EqualTo(c, v)                    => keepsEq(e, c, v)
+    case In(c, vs)                        => vs.exists(keepsEq(e, c, _))
+    case GreaterThan(c, v: String)        => strAbove(e, c, v, strict = true)
+    case GreaterThanOrEqual(c, v: String) => strAbove(e, c, v, strict = false)
+    case LessThan(c, v: String)           => strBelow(e, c, v, strict = true)
+    case LessThanOrEqual(c, v: String)    => strBelow(e, c, v, strict = false)
+    case GreaterThan(c, v)        => e.zMax.get(c).exists(_ > asLong(v).get)
+    case GreaterThanOrEqual(c, v) => e.zMax.get(c).exists(_ >= asLong(v).get)
+    case LessThan(c, v)           => e.zMin.get(c).exists(_ < asLong(v).get)
+    case LessThanOrEqual(c, v)    => e.zMin.get(c).exists(_ <= asLong(v).get)
+    case IsNotNull(c)             => e.zMin.contains(c)
+    case And(l, r)                => keeps(l, e) && keeps(r, e)
+    case _                        => true
+  }
+
+  /** Equality probe: zone containment, then the bloom of the value's
+    * scheme (the rolling hash for strings, the value itself for longs).
+    */
+  private def keepsEq(e: FileEntry, c: String, v: Any): Boolean = v match {
+    case s: String =>
+      strZoneKeeps(e, c, s, s) && bloomKeeps(e, c, strBloomKey(s), strScheme = true)
+    case _ =>
+      val x = asLong(v).get
+      e.zMin.get(c).exists(_ <= x) && e.zMax.get(c).exists(x <= _) &&
+        bloomKeeps(e, c, x, strScheme = false)
+  }
+
+  /** May `e` hold a row of `c` ABOVE `v`? True max ≥ stored max; when
+    * the stored max is truncated it is a strict prefix of the true
+    * max (so the true max sorts above it), and only a probe whose own
+    * prefix sorts above the stored prefix is provably beyond it.
+    */
+  private def strAbove(e: FileEntry, c: String, v: String, strict: Boolean): Boolean =
+    (e.sMax.get(c), e.sMaxTrunc(c)) match {
+      case (Some(zhi), true)  => truncMaxKeeps(v, zhi)
+      case (Some(zhi), false) =>
+        if (strict) cmpUtf8(zhi, v) > 0 else cmpUtf8(zhi, v) >= 0
+      case _ => true // un-zoned string column: keep (stats size cap)
+    }
+
+  /** May `e` hold a row of `c` BELOW `v`? The stored min is ≤ the
+    * true min regardless of truncation, so min ≥ v excludes exactly.
+    */
+  private def strBelow(e: FileEntry, c: String, v: String, strict: Boolean): Boolean =
+    e.sMin.get(c) match {
+      case Some(zlo) => if (strict) cmpUtf8(zlo, v) < 0 else cmpUtf8(zlo, v) <= 0
+      case None      => true // un-zoned string column: keep
+    }
+
+  /** The files of `m` that may hold a row matching EVERY filter (a
+    * conjunction, logical names). Filters the zones cannot decide
+    * ([[prunable]] is false under `m`'s schema) keep every file — they
+    * never prune, and never reach [[keeps]]. Pure: no IO.
+    */
+  def prune(m: Manifest, filters: Seq[Filter]): Seq[FileEntry] = {
+    val types = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
+      .fields.map(f => f.name -> f.dataType).toMap
+    val live = filters.filter(prunable(_, types.get)).map(translate(_, m))
+    if (live.isEmpty) m.files
+    else m.files.filter(e => live.forall(keeps(_, e)))
   }
 
   private def logDir(root: String): Path = Paths.get(root, "_log")
@@ -1036,28 +1200,52 @@ object TableLog {
   private def fullDue(v: Long, checkpointInterval: Int): Boolean =
     checkpointInterval <= 1 || v % checkpointInterval == 0
 
-  /** Commit `df` as a new version. `mode` "overwrite" starts the
-    * snapshot from scratch; "append" carries the parent's files
-    * forward and adds the new ones (the only data IO is the NEW
-    * rows — append never touches existing files; with
-    * `checkpointInterval` > 1 the manifest write is also only
-    * delta-sized except at checkpoints). `txnTag` stamps the
-    * manifest's action field (`append+txn=<appId>:<n>`) — the
-    * [[commitTxn]] idempotency marker.
+  /** Commit `df` as a new version — the one entry for a new batch;
+    * every write passes the same schema gate, constraint gate and txn
+    * guard. `mode` "overwrite" starts the snapshot from scratch;
+    * "append" carries the parent's files forward and adds the new ones
+    * (the only data IO is the NEW rows — append never touches existing
+    * files; with `checkpointInterval` > 1 the manifest write is also
+    * only delta-sized except at checkpoints).
+    *
+    * `txnTag` (`<appId>:<n>`) makes the commit TRANSACTIONAL — the
+    * exactly-once sink primitive for `foreachBatch` ingest (st26): the
+    * version is stamped in the manifest's action field
+    * (`append+txn=<appId>:<n>`), and a txn at or below the app's
+    * high-water mark is a duplicate delivery (foreachBatch re-runs a
+    * batch with the SAME id on recovery), so the call is a
+    * content-exact no-op. Correct because Structured Streaming batch
+    * ids are monotonically increasing per query.
+    *
+    * `checks` are per-call CHECK constraints (name, boolean SQL
+    * expression), validated with the table's DECLARED constraints in
+    * ONE aggregate pass over the batch — SQL CHECK semantics, a row
+    * violates only when the expression is FALSE (NULL passes) — and a
+    * violating batch is rejected BEFORE any data or manifest IO, naming
+    * per-constraint violation counts so an ingest pipeline can route to
+    * quarantine (q69).
+    *
+    * `bloomCols` (long-typed) / `bloomStrCols` (string) add a per-file
+    * BLOOM INDEX of `bloomBits` bits per (file, column) — see
+    * [[withBlooms]].
     */
   def commit(df: DataFrame, root: String, layout: Column,
              numFiles: Int = 8, mode: String = "append",
              checkpointInterval: Int = 1,
              txnTag: Option[String] = None,
              evolve: Boolean = false,
-             commitTs: Option[Long] = None): Long = {
+             commitTs: Option[Long] = None,
+             checks: Seq[(String, String)] = Nil,
+             bloomCols: Seq[String] = Nil,
+             bloomStrCols: Seq[String] = Nil,
+             bloomBits: Int = 1 << 16): Long = {
     require(mode == "append" || mode == "overwrite", s"bad mode $mode")
+    require(bloomBits >= 64 && bloomBits % 64 == 0, s"bad bloomBits $bloomBits")
     val tag = txnTag.map(parseTxnTag)
-    // idempotency guard INSIDE the primitive (the commitTxn contract,
-    // enforced here too so a direct txnTag call can never double-apply
-    // a re-delivered batch or regress the high-water mark): a txn at
-    // or below the app's mark is a duplicate delivery — no-op BEFORE
-    // any data or manifest IO.
+    // idempotency guard: a txn at or below the app's mark is a
+    // duplicate delivery — no-op BEFORE any data or manifest IO (the
+    // same guard mergeMor applies, so no txnTag path can double-apply
+    // a re-delivered batch or regress the high-water mark)
     if (tag.exists { case (app, n) => n <= lastTxn(root, app) })
       return currentVersion(root)
     val parent = currentVersion(root)
@@ -1069,9 +1257,11 @@ object TableLog {
       if (mode == "append" && parent >= 0)
         validateAppendSchema(root, parent, df.schema.toDDL, evolve)
       else df.schema.toDDL
-    // DECLARED constraints gate every commit — an overwrite keeps the
-    // table's declarations (it replaces rows, not the contract)
-    enforceDeclared(root, parent, df, s"$mode commit")
+    // per-call checks and the DECLARED constraints gate every commit in
+    // one pass — an overwrite keeps the table's declarations (it
+    // replaces rows, not the contract)
+    enforceChecks(df, checks ++ carriedChecks(root, parent).toSeq.sortBy(_._1),
+      s"$mode commit")
     val action = txnTag.fold(mode)(t => s"$mode+txn=$t")
     val carried = carriedTxns(root, parent)
     val txns = carried ++ tag.map { case (app, n) =>
@@ -1101,7 +1291,13 @@ object TableLog {
         }
       }
     val (physDf, physLayout) = toPhysical(df, layout, cmap)
-    val added = writeDataFiles(physDf, root, v, physLayout, numFiles)
+    val written = writeDataFiles(physDf, root, v, physLayout, numFiles)
+    // files, zones and blooms are all keyed by the physical name
+    def phys(c: String): String = cmap.getOrElse(c, c)
+    val added =
+      if (bloomCols.isEmpty && bloomStrCols.isEmpty) written
+      else withBlooms(df.sparkSession, root, written, bloomCols.map(phys),
+        bloomStrCols.map(phys), bloomBits)
     if (mode == "overwrite" || parent < 0)
       // an overwrite IS a full snapshot — a delta encoding of it
       // would be remove-everything + add-everything, strictly worse
@@ -1160,7 +1356,7 @@ object TableLog {
     * of (parent, batch), batch order, accreted columns included —
     * which the commit must store instead of the raw batch DDL. Runs
     * BEFORE any data or manifest IO, so a rejected append leaves the
-    * store bit-identical (the commitChecked discipline).
+    * store bit-identical (the constraint gate's discipline).
     */
   private def validateAppendSchema(root: String, parent: Long,
                                    newDdl: String, evolve: Boolean): String = {
@@ -1211,134 +1407,64 @@ object TableLog {
     }
   }
 
-  /** [[commit]] plus a per-file BLOOM INDEX over `bloomCols` (long-
-    * typed columns) — Delta's bloom filter index: zones can't skip an
-    * EQUALITY probe on a column the layout scattered (every file's
-    * range covers the value), but 4 hash bits per distinct value can.
-    * The bitsets are built from the just-written files with ONE
-    * column-pruned scan (explode to ≤4 positions per row, distinct) —
-    * the collected volume is bounded by files·min(4·distinct, mBits)
-    * positions, i.e. exactly the index being built, never row-sized.
-    * Size `bloomBits` to ~7× the expected distinct-per-file for ~1%
-    * false positives; a false positive costs one wasted file read,
-    * false negatives are impossible by construction.
+  /** A per-file BLOOM INDEX over the just-written files `added` —
+    * Delta's bloom filter index: zones can't skip an EQUALITY probe on
+    * a column the layout scattered (every file's range covers the
+    * value), but 4 hash bits per distinct value can. `longCols` /
+    * `strCols` are PHYSICAL names. The bitsets are built with ONE
+    * column-pruned scan per column (explode to ≤4 positions per row,
+    * distinct) — the collected volume is bounded by
+    * files·min(4·distinct, mBits) positions, i.e. exactly the index
+    * being built, never row-sized. Size `mB` to ~7× the expected
+    * distinct-per-file for ~1% false positives; a false positive costs
+    * one wasted file read, false negatives are impossible by
+    * construction.
     */
-  def commitIndexed(df: DataFrame, root: String, layout: Column,
-                    numFiles: Int = 8, mode: String = "append",
-                    bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 16,
-                    checkpointInterval: Int = 1,
-                    bloomStrCols: Seq[String] = Nil): Long = {
-    require(mode == "append" || mode == "overwrite", s"bad mode $mode")
-    require(bloomBits >= 64 && bloomBits % 64 == 0, s"bad bloomBits $bloomBits")
-    val parent = currentVersion(root)
-    val v = parent + 1
-    if (mode == "append" && parent >= 0)
-      validateAppendSchema(root, parent, df.schema.toDDL, evolve = false)
-    val txns = carriedTxns(root, parent)
-    // column mapping: appends inherit the parent's map; files, zones
-    // and BLOOMS (below) are all keyed by the physical name
-    val (cmap, dropped) =
-      if (mode == "append" && parent >= 0) parentMaps(root, parent)
-      else (Map.empty[String, String], Set.empty[String])
-    def phys(c: String): String = cmap.getOrElse(c, c)
-    val (physDf, physLayout) = toPhysical(df, layout, cmap)
-    val added = writeDataFiles(physDf, root, v, physLayout, numFiles)
-    val spark = df.sparkSession
-    val enriched =
-      if ((bloomCols.isEmpty && bloomStrCols.isEmpty) || added.isEmpty) added
-      else {
-        val src = spark.read.parquet(added.map(f => s"$root/${f.path}"): _*)
-        val mB = bloomBits
-        // STRING columns bloom through the portable rolling hash (the
-        // value's UTF-8 bytes → one long), then ride the SAME
-        // double-hashed position pipeline as long columns — so the
-        // manifest format, probe, and false-negative-free contract
-        // are shared; only the value→long step differs (q89's class:
-        // point lookups on high-cardinality text keys — URLs, doc
-        // ids — that zones can't separate).
-        val hashed: Seq[(String, Column)] =
-          bloomCols.map(c => phys(c) -> col(phys(c)).cast("long")) ++
-            bloomStrCols.map(c => phys(c) ->
-              graft.functions.GraftFunctions.rolling_hash(col(phys(c))))
-        val perCol: Seq[(String, Map[String, Set[Int]])] = hashed.map { case (c, cv) =>
-          // mirror of bloomPositions: reduce h1/h2 BEFORE combining so
-          // the position arithmetic never overflows under ANSI
-          val h1 = pmod(graft.functions.GraftFunctions.fmix64(cv), lit(mB.toLong))
-          val h2 = pmod(graft.functions.GraftFunctions.fmix64(
-            cv.bitwiseXOR(lit(bloomGold))), lit((mB - 3).toLong)) + lit(1L)
-          val pos = (0 until 4).map(i =>
-            pmod(h1 + lit(i.toLong) * h2, lit(mB.toLong)).cast("int"))
-          val rows = src.filter(col(c).isNotNull)
-            .select(element_at(split(input_file_name(), "/"), -1).as("f"),
-              explode(array(pos: _*)).as("p"))
-            .distinct().collect()
-          c -> rows.groupBy(_.getString(0))
-            .map { case (f, rs) => f -> rs.map(_.getInt(1)).toSet }
-        }
-        added.map { fe =>
-          val name = fe.path.substring(fe.path.lastIndexOf('/') + 1)
-          val bl = perCol.flatMap { case (c, mp) =>
-            mp.get(name).map { s =>
-              val arr = new Array[Long](mB / 64)
-              s.foreach(p => arr(p / 64) |= 1L << (p % 64))
-              c -> arr
-            }
-          }.toMap
-          fe.copy(blooms = bl,
-            strBlooms = bloomStrCols.map(phys).toSet.intersect(bl.keySet))
-        }
+  private def withBlooms(spark: SparkSession, root: String, added: Seq[FileEntry],
+                         longCols: Seq[String], strCols: Seq[String],
+                         mB: Int): Seq[FileEntry] =
+    if (added.isEmpty) added
+    else {
+      val src = spark.read.parquet(added.map(f => s"$root/${f.path}"): _*)
+      // STRING columns bloom through the portable rolling hash (the
+      // value's UTF-8 bytes → one long), then ride the SAME
+      // double-hashed position pipeline as long columns — so the
+      // manifest format, probe, and false-negative-free contract
+      // are shared; only the value→long step differs (q89's class:
+      // point lookups on high-cardinality text keys — URLs, doc
+      // ids — that zones can't separate).
+      val hashed: Seq[(String, Column)] =
+        longCols.map(c => c -> col(c).cast("long")) ++
+          strCols.map(c => c ->
+            graft.functions.GraftFunctions.rolling_hash(col(c)))
+      val perCol: Seq[(String, Map[String, Set[Int]])] = hashed.map { case (c, cv) =>
+        // mirror of bloomPositions: reduce h1/h2 BEFORE combining so
+        // the position arithmetic never overflows under ANSI
+        val h1 = pmod(graft.functions.GraftFunctions.fmix64(cv), lit(mB.toLong))
+        val h2 = pmod(graft.functions.GraftFunctions.fmix64(
+          cv.bitwiseXOR(lit(bloomGold))), lit((mB - 3).toLong)) + lit(1L)
+        val pos = (0 until 4).map(i =>
+          pmod(h1 + lit(i.toLong) * h2, lit(mB.toLong)).cast("int"))
+        val rows = src.filter(col(c).isNotNull)
+          .select(element_at(split(input_file_name(), "/"), -1).as("f"),
+            explode(array(pos: _*)).as("p"))
+          .distinct().collect()
+        c -> rows.groupBy(_.getString(0))
+          .map { case (f, rs) => f -> rs.map(_.getInt(1)).toSet }
       }
-    if (mode == "overwrite" || parent < 0)
-      writeManifest(root, Manifest(v, parent, mode, df.schema.toDDL, enriched,
-        txns = txns, colMap = cmap, droppedPhys = dropped))
-    else if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, mode, df.schema.toDDL,
-        readManifest(root, parent).files ++ enriched, txns = txns,
-        colMap = cmap, droppedPhys = dropped))
-    else
-      writeManifest(root, Manifest(v, parent, mode, df.schema.toDDL,
-        enriched, kind = "delta", txns = txns,
-        colMap = cmap, droppedPhys = dropped))
-  }
-
-  /** Point-probe file plan: a file survives only if its zone covers
-    * the value AND (when bloom-indexed) all 4 bloom bits are set.
-    * Un-indexed files are conservatively kept — mixed old/new tables
-    * stay correct while the index backfills.
-    */
-  def planFilesPoint(root: String, colName: String, value: Long,
-                     asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val c = m.physicalOf(colName) // zones/blooms are keyed physical
-    val sel = m.files.filter { f =>
-      val zoneOk = (f.zMin.get(c), f.zMax.get(c)) match {
-        case (Some(lo), Some(hi)) => lo <= value && value <= hi
-        case _ => false // all-NULL chunk: no row can equal the value
+      added.map { fe =>
+        val name = fe.path.substring(fe.path.lastIndexOf('/') + 1)
+        val bl = perCol.flatMap { case (c, mp) =>
+          mp.get(name).map { s =>
+            val arr = new Array[Long](mB / 64)
+            s.foreach(p => arr(p / 64) |= 1L << (p % 64))
+            c -> arr
+          }
+        }.toMap
+        fe.copy(blooms = bl,
+          strBlooms = strCols.toSet.intersect(bl.keySet))
       }
-      // probe only LONG-keyed blooms: a string-hashed bitset holds
-      // different bits for the same logical value, so probing it with
-      // a long key would silently false-negative — keep instead
-      val bloomOk = f.blooms.get(c) match {
-        case Some(bits) if !f.strBlooms(c) =>
-          bloomPositions(value, bits.length * 64)
-            .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-        case _ => true
-      }
-      zoneOk && bloomOk
     }
-    (sel, m.files.size)
-  }
-
-  /** Bloom+zone-pruned equality read: only may-contain files are
-    * scanned, then the row predicate applies inside the survivors.
-    */
-  def readPoint(spark: SparkSession, root: String, colName: String,
-                value: Long, asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesPoint(root, colName, value, asOf)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    readFiles(spark, root, m, sel)
-      .filter(col(colName) === lit(value))
-  }
 
   /** The probe long a STRING bloom stores and checks: the portable
     * rolling hash of the value's UTF-8 bytes — [[bloomPositions]]
@@ -1348,63 +1474,6 @@ object TableLog {
   private[sources] def strBloomKey(value: String): Long =
     org.apache.spark.sql.graftx.RollingHash.hash(
       value.getBytes(StandardCharsets.UTF_8))
-
-  /** STRING point-probe file plan: truncation-safe zone check plus —
-    * when a string bloom rides the manifest — the 4-bit probe over
-    * the rolling-hashed value. Un-indexed files keep conservatively;
-    * no false negatives by construction (q89's class: "find this URL
-    * in 100 TB" without scanning a file per zone overlap).
-    */
-  def planFilesPointStr(root: String, colName: String, value: String,
-                        asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val key = strBloomKey(value)
-    val c = m.physicalOf(colName)
-    val sel = m.files.filter { f =>
-      // probe only blooms the manifest TAGS as string-hashed: a
-      // pre-existing bloom built via the long path (cast('long') over
-      // numeric-looking strings) holds differently-keyed bits, and
-      // probing it with the rolling-hash key would return
-      // guaranteed-empty results with no error — keep conservatively
-      strZoneKeeps(f, c, value, value) && (f.blooms.get(c) match {
-        case Some(bits) if f.strBlooms(c) =>
-          bloomPositions(key, bits.length * 64)
-            .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-        case _ => true
-      })
-    }
-    (sel, m.files.size)
-  }
-
-  /** String-bloom-pruned equality read — the [[readPoint]] twin. */
-  def readPointStr(spark: SparkSession, root: String, colName: String,
-                   value: String, asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesPointStr(root, colName, value, asOf)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    readFiles(spark, root, m, sel)
-      .filter(col(colName) === lit(value))
-  }
-
-  /** Commit-time CHECK constraints (Delta's table-constraint shape):
-    * each (name, boolean SQL expression) must hold for every row of
-    * the incoming batch — SQL CHECK semantics, a row violates only
-    * when the expression is FALSE (NULL passes). All constraints are
-    * validated in ONE aggregate pass over the batch (map-side
-    * partial counts; Delta pays the same extra scan), and a
-    * violating batch is rejected BEFORE any data or manifest IO —
-    * the store is bit-identical after a rejected commit, which
-    * TableLogSpec pins. The error lists per-constraint violation
-    * counts so the ingest pipeline can route to quarantine (q69
-    * composes exactly that: constraint split → clean commit +
-    * quarantine table, the q64/q66 posture with declared rules).
-    */
-  def commitChecked(df: DataFrame, root: String, layout: Column,
-                    numFiles: Int = 8, mode: String = "append",
-                    checks: Seq[(String, String)] = Nil,
-                    checkpointInterval: Int = 1): Long = {
-    enforceChecks(df, checks, "commit")
-    commit(df, root, layout, numFiles, mode, checkpointInterval)
-  }
 
   /** Header-only read (first line) — never resolves the file list,
     * so it stays O(1) cheap text IO per call.
@@ -1598,8 +1667,8 @@ object TableLog {
     }
   }
 
-  /** One-pass constraint validator (shared by [[commitChecked]]'s
-    * per-call checks and the declared-constraint enforcement): counts
+  /** One-pass constraint validator (shared by [[commit]]'s per-call
+    * checks and the declared-constraint enforcement): counts
     * violations per named predicate — SQL CHECK semantics, a row
     * violates only when the predicate is FALSE (NULL passes) — and
     * rejects loudly naming every violated constraint and its count.
@@ -1701,7 +1770,7 @@ object TableLog {
     * batch is exactly one with `txn <= lastTxn`. O(1): the resolved
     * map rides EVERY manifest header (carried forward at commit), so
     * this reads one line of the HEAD header — never a history scan,
-    * which for a commitTxn-per-micro-batch sink would be O(batches²)
+    * which for a txn-commit-per-micro-batch sink would be O(batches²)
     * text IO over the stream's lifetime (the round-11 audit's
     * wrong-shape edge). Because the map is carried forward, [[vacuum]]
     * can never forget a mark — retention and the sink's checkpoint
@@ -1717,27 +1786,6 @@ object TableLog {
       if (h.length >= 7) parseTxns(h(6)).getOrElse(appId, -1L)
       else legacyTxnMap(root).getOrElse(appId, -1L)
     }
-  }
-
-  /** Transactional append — the exactly-once sink primitive for
-    * `foreachBatch` streaming ingest (st26): commit the batch as a
-    * new version stamped `appId:txn`, UNLESS a version with an
-    * equal-or-higher txn for this appId already exists, in which
-    * case the delivery is a duplicate (foreachBatch re-runs a batch
-    * with the SAME id on recovery) and the call is a content-exact
-    * no-op. Correct because Structured Streaming batch ids are
-    * monotonically increasing per query.
-    */
-  def commitTxn(df: DataFrame, root: String, layout: Column,
-                numFiles: Int, appId: String, txn: Long,
-                checkpointInterval: Int = 1): Long = {
-    require(appId.nonEmpty &&
-        !appId.exists(c => c == '\t' || c == '\n' || c == ':' || c == ','),
-      s"appId must be non-empty and ':'/','/tab/newline-free: $appId")
-    // the duplicate-delivery no-op now lives inside commit's txnTag
-    // path itself (shared with mergeMor), so this is a plain delegate
-    commit(df, root, layout, numFiles, "append", checkpointInterval,
-      txnTag = Some(s"$appId:$txn"))
   }
 
   /** Parse + validate an `<appId>:<txn>` tag — every txnTag entry
@@ -1897,105 +1945,63 @@ object TableLog {
     }
   }
 
-  /** The file listing a range predicate `lo <= zoneCol <= hi` must
-    * read, resolved PURELY from the manifest (zone intersect — no
-    * data IO): the q61 skipping report, executed. Returns
-    * (selected, total) so callers can assert the prune.
+  /** The file plan of a conjunction of `filters` over version `asOf`
+    * (head by default), resolved PURELY from the manifest by the
+    * [[prune]] rule — the q61 skipping report, executed. Returns
+    * (selected, total) so callers can assert the prune. A Z-ORDER
+    * layout (ZOrder.zkey as the commit's layout column) is why a
+    * conjunction of ranges over two columns prunes multiplicatively:
+    * Morton tiles keep BOTH dimensions' per-file zones tight (q68
+    * certifies the values; TableLogSpec pins the file counts).
     */
+  def plan(root: String, filters: Seq[Filter],
+           asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
+    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
+    (prune(m, filters), m.files.size)
+  }
+
+  /** [[plan]] of the range `lo <= zoneCol <= hi`. */
   def planFiles(root: String, zoneCol: String, lo: Long, hi: Long,
                 asOf: Option[Long] = None): (Seq[FileEntry], Int) =
-    planFilesMulti(root, Seq((zoneCol, lo, hi)), asOf)
+    plan(root, Seq(GreaterThanOrEqual(zoneCol, lo), LessThanOrEqual(zoneCol, hi)), asOf)
 
-  /** Conjunctive multi-column zone plan: a file survives only if
-    * EVERY predicate's [lo,hi] intersects its zone for that column —
-    * the reason a Z-ORDER layout (ZOrder.zkey as the commit's layout
-    * column) beats single-key clustering: Morton tiles keep BOTH
-    * dimensions' per-file zones tight, so a 2-D range predicate
-    * prunes multiplicatively where a single-key layout prunes on one
-    * dimension and reads everything on the other (q68 certifies the
-    * values; TableLogSpec pins the file counts).
-    */
-  def planFilesMulti(root: String, preds: Seq[(String, Long, Long)],
-                     asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    require(preds.nonEmpty)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val sel = m.files.filter { f =>
-      preds.forall { case (c0, lo, hi) =>
-        val c = m.physicalOf(c0)
-        (f.zMin.get(c), f.zMax.get(c)) match {
-          case (Some(zlo), Some(zhi)) => zlo <= hi && zhi >= lo
-          case _ => false // all-NULL (or un-zoned) chunk: no row can match a range
-        }
-      }
-    }
-    (sel, m.files.size)
-  }
-
-  /** STRING zone plan: the files a range predicate `lo <= col <= hi`
-    * (bytewise UTF-8 order — Spark's and DuckDB's string comparison)
-    * must read, resolved purely from the manifest's truncated string
-    * zones via [[strZoneKeeps]]. The columns a text corpus actually
-    * filters by (source, lang, url domain) are strings — without this
-    * every such WHERE scanned the whole table (round-12 missing-item
-    * 2). Same conservative contract as the long zones: a kept file
-    * may still contain no match (row predicate re-applies), an
-    * excluded file provably contains none.
-    */
-  def planFilesStr(root: String, preds: Seq[(String, String, String)],
-                   asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    require(preds.nonEmpty)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val sel = m.files.filter(f =>
-      preds.forall { case (c, lo, hi) =>
-        strZoneKeeps(f, m.physicalOf(c), lo, hi) })
-    (sel, m.files.size)
-  }
-
-  /** String-zone-pruned range read: only may-contain files are
-    * scanned, then the row predicates apply inside the survivors.
-    */
-  def readRangeStr(spark: SparkSession, root: String,
-                   preds: Seq[(String, String, String)],
-                   asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesStr(root, preds, asOf)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val base = readFiles(spark, root, m, sel)
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
-    }
-  }
+  /** [[plan]] of the equality `colName = value` (zone + bloom probe). */
+  def planFilesPoint(root: String, colName: String, value: Long,
+                     asOf: Option[Long] = None): (Seq[FileEntry], Int) =
+    plan(root, Seq(EqualTo(colName, value)), asOf)
 
   /** Snapshot read, optionally AS OF an older version (the q63
     * semantics through the store: the manifest IS the time machine —
     * old versions stay readable until vacuumed because their files
-    * are immutable).
+    * are immutable), optionally restricted to the rows matching EVERY
+    * one of `filters`. The manifest is resolved ONCE: only the files
+    * [[prune]] keeps are handed to the scan (file-level skip BEFORE
+    * any IO), then the same filters apply row by row inside the
+    * survivors — so plan, schema and column mapping all come from one
+    * version even when a commit lands meanwhile.
     */
-  def read(spark: SparkSession, root: String, asOf: Option[Long] = None): DataFrame = {
+  def read(spark: SparkSession, root: String, asOf: Option[Long] = None,
+           filters: Seq[Filter] = Nil): DataFrame = {
+    val rowPreds = filters.map(filterColumn)
     val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    readFiles(spark, root, m, m.files)
+    rowPreds.foldLeft(readFiles(spark, root, m, prune(m, filters)))(_.filter(_))
   }
 
-  /** Zone-pruned range read: only files whose [min,max] intersects
-    * [lo,hi] are handed to the scan (file-level skip BEFORE any IO),
-    * then the row-level predicate still applies inside the survivors.
+  /** The row predicate of a filter shape [[keeps]] understands; any
+    * other shape is rejected before any IO.
     */
-  def readRange(spark: SparkSession, root: String, zoneCol: String,
-                lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame =
-    readRangeMulti(spark, root, Seq((zoneCol, lo, hi)), asOf)
-
-  /** Conjunctive zone-pruned read: only files whose zones intersect
-    * EVERY range are scanned, then the row-level predicates still
-    * apply inside the survivors.
-    */
-  def readRangeMulti(spark: SparkSession, root: String,
-                     preds: Seq[(String, Long, Long)],
-                     asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesMulti(root, preds, asOf)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val base = readFiles(spark, root, m, sel)
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(col(c).between(lo, hi))
-    }
+  private def filterColumn(f: Filter): Column = f match {
+    case EqualTo(c, v)            => col(c) === lit(v)
+    case GreaterThan(c, v)        => col(c) > lit(v)
+    case GreaterThanOrEqual(c, v) => col(c) >= lit(v)
+    case LessThan(c, v)           => col(c) < lit(v)
+    case LessThanOrEqual(c, v)    => col(c) <= lit(v)
+    case In(c, vs)                => col(c).isin(vs.toSeq: _*)
+    case IsNotNull(c)             => col(c).isNotNull
+    case And(l, r)                => filterColumn(l) && filterColumn(r)
+    case other => throw new IllegalArgumentException(
+      s"TableLog.read: unsupported filter $other (supported: =, <, <=, >, >=, " +
+        "IN, IS NOT NULL, AND)")
   }
 
   // ---- change data feed ------------------------------------------------

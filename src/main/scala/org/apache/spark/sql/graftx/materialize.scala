@@ -49,9 +49,10 @@ object Materialize {
     * grouped collect, anything whose map side reads every input
     * partition. An action that can short-circuit input partitions
     * (`limit` directly over the frame, `isEmpty`, `head` without a
-    * shuffle in between) would leave blocks unstored, and a later
-    * consumer of the truncated-lineage RDD dies on the missing
-    * blocks.
+    * shuffle in between) leaves blocks unstored; Spark's local
+    * checkpoint then computes the missing partitions in an extra
+    * backfill job, so results stay correct but the one-job benefit
+    * is lost.
     */
   def cleanWith[T](df: DataFrame)(first: DataFrame => T): (DataFrame, T) = {
     val cp = df.localCheckpoint(eager = false)

@@ -82,7 +82,7 @@ class GraftLogDsvSpec extends AnyFunSuite {
     // spans nearly the whole domain → zones alone keep everything
     val df = (0L until 800L).map(k => (k, (k % 16) * 100 + k / 16))
       .toDF("k", "cents")
-    TableLog.commitIndexed(df, root, expr("cents div 100"), numFiles = 16,
+    TableLog.commit(df, root, expr("cents div 100"), numFiles = 16,
       mode = "overwrite", bloomCols = Seq("k"))
     val hit = sqlRead(root).filter(col("k") === 437L)
     assert(hit.collect().map(_.getLong(0)).toSeq == Seq(437L))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.TableLog
 
@@ -29,6 +30,10 @@ class TableLogSpec extends AnyFunSuite {
   private def mkDf(ks: Seq[Long]) =
     ks.map(k => (k, k * 10 + 1)).toDF("k", "cents")
 
+  /** The filters of `lo <= c <= hi`. */
+  private def between(c: String, lo: Any, hi: Any) =
+    Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+
   test("commit/append/read + AS-OF: every version stays readable and exact") {
     val root = freshRoot("asof")
     val v0 = TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 4, "overwrite")
@@ -54,7 +59,7 @@ class TableLogSpec extends AnyFunSuite {
       s"expected a strict prune, got ${sel.size}/$total")
     // the zone intersect is conservative AND sufficient: pruned read
     // equals the full-table filter
-    val pruned = TableLog.readRange(spark, root, "k", 150L, 249L)
+    val pruned = TableLog.read(spark, root, filters = between("k", 150L, 249L))
     assert(rows(pruned) == rows(mkDf(150L to 249L)))
     // the executed scan touches ONLY the selected files (prune happens
     // BEFORE the scan, not as a post-filter)
@@ -64,7 +69,7 @@ class TableLogSpec extends AnyFunSuite {
     // an out-of-zone range reads zero files
     val (none, _) = TableLog.planFiles(root, "k", 5000L, 6000L)
     assert(none.isEmpty)
-    assert(TableLog.readRange(spark, root, "k", 5000L, 6000L).count() == 0L)
+    assert(TableLog.read(spark, root, filters = between("k", 5000L, 6000L)).count() == 0L)
   }
 
   test("compact: content preserved, small tail folded, big files untouched") {
@@ -362,6 +367,14 @@ class TableLogSpec extends AnyFunSuite {
       TableLog.commit(Seq((901L, -2L)).toDF("k", "cents"), root,
         expr("k div 25"), 1, "append", txnTag = Some("ckspec:0")) }
     assert(e4.getMessage.contains("c_pos=1"), e4.getMessage)
+    // 5. a bloom-indexed commit, appending or overwriting
+    Seq("append", "overwrite").foreach { mode =>
+      val e = intercept[IllegalArgumentException] {
+        TableLog.commit(Seq((4L, -5L)).toDF("k", "cents"), root,
+          expr("k div 25"), 1, mode, bloomCols = Seq("k")) }
+      assert(e.getMessage.contains("c_pos=1"), s"$mode: ${e.getMessage}")
+      assert(TableLog.currentVersion(root) == 2L, s"$mode bloom commit moved the head")
+    }
     // nothing landed, and CLEAN writes are unaffected
     assert(TableLog.currentVersion(root) == 2L)
     TableLog.commit(Seq((902L, 7L)).toDF("k", "cents"), root,
@@ -461,40 +474,40 @@ class TableLogSpec extends AnyFunSuite {
     assert(TableLog.vacuum(root, keepFrom = 1L).isEmpty)
   }
 
-  test("commitTxn: duplicate and stale deliveries are content-exact no-ops, per app") {
+  test("txnTag commit: duplicate and stale deliveries are content-exact no-ops, per app") {
     val root = freshRoot("txn")
-    val v0 = TableLog.commitTxn(mkDf(0L until 40L), root, expr("k div 25"), 2,
-      appId = "sinkA", txn = 0L)
-    val v1 = TableLog.commitTxn(mkDf(40L until 60L), root, expr("k div 25"), 1,
-      appId = "sinkA", txn = 1L)
+    val v0 = TableLog.commit(mkDf(0L until 40L), root, expr("k div 25"), 2,
+      txnTag = Some("sinkA:0"))
+    val v1 = TableLog.commit(mkDf(40L until 60L), root, expr("k div 25"), 1,
+      txnTag = Some("sinkA:1"))
     assert(v0 == 0L && v1 == 1L && TableLog.lastTxn(root, "sinkA") == 1L)
     val before = rows(TableLog.read(spark, root))
     // duplicate of txn 1 and a stale txn 0 (recovery re-deliveries):
     // no new version, no content change — even with different payloads
-    assert(TableLog.commitTxn(mkDf(0L until 999L), root, expr("k div 25"), 2,
-      "sinkA", 1L) == 1L)
-    assert(TableLog.commitTxn(mkDf(0L until 999L), root, expr("k div 25"), 2,
-      "sinkA", 0L) == 1L)
+    assert(TableLog.commit(mkDf(0L until 999L), root, expr("k div 25"), 2,
+      txnTag = Some("sinkA:1")) == 1L)
+    assert(TableLog.commit(mkDf(0L until 999L), root, expr("k div 25"), 2,
+      txnTag = Some("sinkA:0")) == 1L)
     assert(TableLog.currentVersion(root) == 1L)
     assert(rows(TableLog.read(spark, root)) == before)
     // a DIFFERENT app's txn ids are an independent sequence
     assert(TableLog.lastTxn(root, "sinkB") == -1L)
-    assert(TableLog.commitTxn(mkDf(60L until 70L), root, expr("k div 25"), 1,
-      "sinkB", 0L) == 2L)
+    assert(TableLog.commit(mkDf(60L until 70L), root, expr("k div 25"), 1,
+      txnTag = Some("sinkB:0")) == 2L)
     assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 70L)))
   }
 
-  test("commitChecked: violations reject before ANY IO, NULL passes (SQL CHECK), counts named") {
+  test("commit checks: violations reject before ANY IO, NULL passes, counts named") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = freshRoot("checked")
     val checks = Seq("pos" -> "cents > 0", "bounded" -> "cents <= 500")
-    assert(TableLog.commitChecked(mkDf(0L until 20L), root, expr("k div 25"), 2,
-      "overwrite", checks) == 0L)
+    assert(TableLog.commit(mkDf(0L until 20L), root, expr("k div 25"), 2,
+      "overwrite", checks = checks) == 0L)
     // violating batch: k=60..99 → cents 601..991 breaks `bounded`
     val ex = intercept[IllegalArgumentException] {
-      TableLog.commitChecked(mkDf(0L until 100L), root, expr("k div 25"), 2,
-        "append", checks)
+      TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 2,
+        "append", checks = checks)
     }
     assert(ex.getMessage.contains("bounded=50"), ex.getMessage)
     // rejected BEFORE any IO: version unchanged AND no v1 data dir
@@ -506,9 +519,134 @@ class TableLogSpec extends AnyFunSuite {
     // SQL CHECK semantics: a NULL expression result is NOT a violation
     val withNull = Seq((30L, Some(301L)), (31L, None))
       .toDF("k", "cents").select(col("k"), col("cents").cast("long"))
-    assert(TableLog.commitChecked(withNull, root, expr("k div 25"), 1,
-      "append", checks) == 1L)
+    assert(TableLog.commit(withNull, root, expr("k div 25"), 1,
+      "append", checks = checks) == 1L)
     assert(TableLog.read(spark, root).count() == 22L)
+  }
+
+  test("prune: every filter shape keeps every matching file; undecidable shapes keep all") {
+    import org.apache.spark.sql.sources._
+    // SQL semantics of a filter over one row (NULL never matches);
+    // strings compare bytewise, as Spark's UTF8String does
+    def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
+      case (null, _)              => None
+      case (x: Long, y: Long)     => Some(java.lang.Long.compare(x, y))
+      case (x: Int, y: Int)       => Some(Integer.compare(x, y))
+      case (x: Long, y: Double)   => Some(java.lang.Double.compare(x.toDouble, y))
+      case (x: String, y: String) => Some(TableLog.cmpUtf8(x, y))
+      case other                  => fail(s"unexpected comparison $other")
+    }
+    def holds(f: Filter, r: Map[String, Any]): Boolean = f match {
+      case EqualTo(c, v)            => cmp(r(c), v).contains(0)
+      case GreaterThan(c, v)        => cmp(r(c), v).exists(_ > 0)
+      case GreaterThanOrEqual(c, v) => cmp(r(c), v).exists(_ >= 0)
+      case LessThan(c, v)           => cmp(r(c), v).exists(_ < 0)
+      case LessThanOrEqual(c, v)    => cmp(r(c), v).exists(_ <= 0)
+      case In(c, vs)                => vs.exists(v => cmp(r(c), v).contains(0))
+      case IsNotNull(c)             => r(c) != null
+      case And(l, q)                => holds(l, r) && holds(q, r)
+      case other                    => fail(s"unexpected filter $other")
+    }
+    val cols = Seq("k", "w", "x", "i", "s", "t")
+    var pruning = 0
+    for (seed <- 0 until 2) {
+      val rnd = new scala.util.Random(seed)
+      val root = freshRoot(s"prune$seed")
+      // k clusters files (tight zones); v (long, renamed to w below) and
+      // t (string) are scattered and bloom-indexed; x is all-NULL in
+      // every third file (no zone); i is an INT column; s is clustered,
+      // and its values in even files run past the 16-byte zone budget
+      // (truncated max)
+      def batch(ks: Seq[Long]) = ks.map { k =>
+        val g = k / 50
+        (k, rnd.nextInt(1000).toLong,
+          if (g % 3 == 0) None else Some(rnd.nextInt(100).toLong),
+          (k % 120).toInt,
+          s"grp$g-${rnd.nextInt(100)}" + (if (g % 2 == 0) "-long-tail-value" else ""),
+          s"t${rnd.nextInt(500)}")
+      }
+      TableLog.commit(batch(0L until 400L).toDF("k", "v", "x", "i", "s", "t"), root,
+        expr("k div 50"), 8, "overwrite", bloomCols = Seq("v"),
+        bloomStrCols = Seq("t"), bloomBits = 1024)
+      TableLog.renameColumn(root, "v", "w")
+      TableLog.commit(batch(400L until 500L).toDF("k", "w", "x", "i", "s", "t"), root,
+        expr("k div 50"), 2, "append", bloomCols = Seq("w"), bloomStrCols = Seq("t"))
+      val full = TableLog.read(spark, root).withColumn("__f", input_file_name())
+        .collect().map(r => (cols.map(c => c -> r.getAs[Any](c)).toMap,
+          r.getAs[String]("__f").split('/').last)).toSeq
+      def key(r: Map[String, Any]) = cols.map(r)
+      // every file's min and max per column: the values a zone
+      // comparison is off by one on
+      val byValue = Ordering.fromLessThan[Any]((a, b) => cmp(a, b).get < 0)
+      val bounds = cols.map { c =>
+        c -> full.groupBy(_._2).values.toIndexedSeq.flatMap { rs =>
+          val vs = rs.map(_._1(c)).filter(_ != null)
+          if (vs.isEmpty) Nil else Seq(vs.min(byValue), vs.max(byValue))
+        }
+      }.toMap
+      // a file boundary, a value present in the column, a prefix of one
+      // extended by a byte sorting below/inside/above it, or an
+      // arbitrary value
+      def literal(c: String): Any = {
+        val present = full(rnd.nextInt(full.size))._1(c)
+        (rnd.nextInt(4), present) match {
+          case (0, _) => bounds(c)(rnd.nextInt(bounds(c).size))
+          case (1, v: String) => v.take(1 + rnd.nextInt(v.length)) + "-az~" (rnd.nextInt(4))
+          case (2, v) if v != null => v
+          case _ =>
+            if (c == "s" || c == "t") s"${"gt" (rnd.nextInt(2))}${rnd.nextInt(600)}"
+            else if (c == "i") rnd.nextInt(140) - 10
+            else (rnd.nextInt(1100) - 50).toLong
+        }
+      }
+      def shape(): Filter = {
+        val c = cols(rnd.nextInt(cols.size))
+        rnd.nextInt(8) match {
+          case 0 => EqualTo(c, literal(c))
+          case 1 => LessThan(c, literal(c))
+          case 2 => LessThanOrEqual(c, literal(c))
+          case 3 => GreaterThan(c, literal(c))
+          case 4 => GreaterThanOrEqual(c, literal(c))
+          case 5 => In(c, Array.fill(1 + rnd.nextInt(3))(literal(c)))
+          case 6 => IsNotNull(c)
+          case _ => And(shape(), shape())
+        }
+      }
+      for (_ <- 0 until 60) {
+        val fs = Seq.fill(1 + rnd.nextInt(3))(shape())
+        val (sel, total) = TableLog.plan(root, fs)
+        val kept = sel.map(_.path.split('/').last).toSet
+        val matching = full.filter(r => fs.forall(holds(_, r._1)))
+        val lost = matching.map(_._2).toSet -- kept
+        assert(lost.isEmpty, s"$fs pruned files holding matches: $lost")
+        if (sel.size < total) pruning += 1
+        val got = TableLog.read(spark, root, filters = fs).collect()
+          .map(r => cols.map(c => r.getAs[Any](c))).toSeq
+        assert(got.sortBy(_.mkString("|")) == matching.map(r => key(r._1)).sortBy(_.mkString("|")),
+          s"pruned read differs from the brute-force filter under $fs")
+      }
+      // shapes the zones cannot decide keep EVERY file: IsNotNull on a
+      // string (absent string zone ≠ all-NULL) and a fractional literal
+      // against a long column; neither prunes all files nor throws
+      val total = TableLog.readManifest(root, TableLog.currentVersion(root)).files.size
+      for (f <- Seq(IsNotNull("s"), EqualTo("k", 3.0), EqualTo("w", 3.5))) {
+        assert(TableLog.plan(root, Seq(f))._1.size == total, s"$f must keep every file")
+        val want = full.count(r => holds(f, r._1))
+        assert(TableLog.read(spark, root, filters = Seq(f)).count() == want, s"$f")
+      }
+      // an INT column prunes like a BIGINT one (footer stats zone both
+      // as longs), through the API and the SQL scan alike
+      val (iSel, _) = TableLog.plan(root, Seq(EqualTo("i", 60)))
+      assert(iSel.size < total, s"INT equality kept ${iSel.size}/$total")
+      assert(spark.read.format("graftlog").option("path", root).load()
+        .filter(col("i") === 60).count() == full.count(r => holds(EqualTo("i", 60), r._1)))
+      assert(graft.sources.GraftLogProvider.lastScanPlan == ((iSel.size, total)))
+      // unsupported shapes are rejected loudly
+      intercept[IllegalArgumentException] {
+        TableLog.read(spark, root, filters = Seq(Or(IsNotNull("k"), IsNotNull("x")))) }
+    }
+    info(s"$pruning of 120 random conjunctions pruned a file")
+    assert(pruning >= 60, s"only $pruning of 120 random conjunctions pruned a file")
   }
 
   test("bloom index: equality probes prune scattered columns, never false-negative") {
@@ -519,13 +657,13 @@ class TableLogSpec extends AnyFunSuite {
     val df = (0L until 1600L)
       .map(k => (k, Math.floorMod(k * 2654435761L, 4096L)))
       .toDF("k", "v")
-    TableLog.commitIndexed(df, root, expr("k div 100"), numFiles = 16,
+    TableLog.commit(df, root, expr("k div 100"), numFiles = 16,
       mode = "overwrite", bloomCols = Seq("v"), bloomBits = 1 << 12)
     // no false negatives: for a sample of present values, the owning
     // file is always selected and the pruned read finds the row
     for (k <- Seq(0L, 7L, 123L, 999L, 1599L)) {
       val v = Math.floorMod(k * 2654435761L, 4096L)
-      val got = TableLog.readPoint(spark, root, "v", v)
+      val got = TableLog.read(spark, root, filters = Seq(EqualTo("v", v)))
         .select("k").collect().map(_.getLong(0)).toSet
       val want = (0L until 1600L)
         .filter(x => Math.floorMod(x * 2654435761L, 4096L) == v).toSet
@@ -544,7 +682,7 @@ class TableLogSpec extends AnyFunSuite {
     // rows; 4099 is outside the mod-4096 domain entirely
     val (mSel, _) = TableLog.planFilesPoint(root, "v", 4099L)
     assert(mSel.isEmpty, s"out-of-zone miss should prune all, kept ${mSel.size}")
-    assert(TableLog.readPoint(spark, root, "v", 4099L).count() == 0L)
+    assert(TableLog.read(spark, root, filters = Seq(EqualTo("v", 4099L))).count() == 0L)
     // blooms survive the manifest text roundtrip byte-exactly
     val fe = TableLog.readManifest(root, 0L).files.head
     assert(fe.blooms.contains("v") && fe.blooms("v").length == (1 << 12) / 64)
@@ -559,15 +697,13 @@ class TableLogSpec extends AnyFunSuite {
     // whole domain → zone pruning keeps everything
     TableLog.commit(df, root, pmod(col("k") * lit(2654435761L), lit(16L)),
       numFiles = 16, mode = "overwrite")
-    val (s0, t0) = TableLog.planFilesMulti(root,
-      Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
+    val (s0, t0) = TableLog.plan(root, between("xb", 10L, 20L) ++ between("yb", 10L, 20L))
     assert(t0 == 16 && s0.size == t0,
       s"scattered layout should prune nothing, kept ${s0.size}/$t0")
     TableLog.recluster(spark, root,
       (ZOrder.zkey(col("xb"), col("yb"), 8) / lit(256)).cast("long"),
       numFiles = 16)
-    val (s1, t1) = TableLog.planFilesMulti(root,
-      Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
+    val (s1, t1) = TableLog.plan(root, between("xb", 10L, 20L) ++ between("yb", 10L, 20L))
     assert(t1 == 16 && s1.size < s0.size,
       s"recluster must make the 2-D prune real: ${s1.size}/${s0.size}")
     // content-preserving + online: both versions read the same rows
@@ -588,8 +724,7 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.commit(df, root,
       (ZOrder.zkey(col("xb"), col("yb"), 8) / lit(256)).cast("long"),
       numFiles = 16, mode = "overwrite")
-    val (multi, total) = TableLog.planFilesMulti(root,
-      Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
+    val (multi, total) = TableLog.plan(root, between("xb", 10L, 20L) ++ between("yb", 10L, 20L))
     val (sx, _) = TableLog.planFiles(root, "xb", 10L, 20L)
     val (sy, _) = TableLog.planFiles(root, "yb", 10L, 20L)
     assert(total == 16)
@@ -599,8 +734,8 @@ class TableLogSpec extends AnyFunSuite {
       s"multi=${multi.size} xb=${sx.size} yb=${sy.size}")
     assert(sx.size < total && sy.size < total)
     // correctness: the pruned read equals the brute-force filter
-    val got = TableLog.readRangeMulti(spark, root,
-        Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
+    val got = TableLog.read(spark, root,
+        filters = between("xb", 10L, 20L) ++ between("yb", 10L, 20L))
       .select("k").collect().map(_.getLong(0)).toSet
     val want = (0L until 4096L)
       .filter(k => (k % 64) >= 10 && (k % 64) <= 20 && (k / 64) >= 10 && (k / 64) <= 20)
@@ -646,9 +781,9 @@ class TableLogSpec extends AnyFunSuite {
     import java.nio.charset.StandardCharsets
     val root = freshRoot("txnmap")
     TableLog.commit(mkDf(0L until 20L), root, expr("k div 20"), 1, "overwrite")
-    TableLog.commitTxn(mkDf(20L until 40L), root, expr("k div 20"), 1, "appA", 0L)
-    TableLog.commitTxn(mkDf(40L until 60L), root, expr("k div 20"), 1, "appB", 5L)
-    TableLog.commitTxn(mkDf(60L until 80L), root, expr("k div 20"), 1, "appA", 1L)
+    TableLog.commit(mkDf(20L until 40L), root, expr("k div 20"), 1, txnTag = Some("appA:0"))
+    TableLog.commit(mkDf(40L until 60L), root, expr("k div 20"), 1, txnTag = Some("appB:5"))
+    TableLog.commit(mkDf(60L until 80L), root, expr("k div 20"), 1, txnTag = Some("appA:1"))
     // a txn-less maintenance commit must CARRY the map forward
     TableLog.compact(spark, root, "k", targetRows = 1000L, smallRows = 30L)
     assert(TableLog.lastTxn(root, "appA") == 1L)
@@ -672,7 +807,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(TableLog.lastTxn(root, "appB") == 5L)
     // and the duplicate-delivery no-op contract still holds after vacuum
     val before = rows(TableLog.read(spark, root))
-    TableLog.commitTxn(mkDf(999L until 1009L), root, expr("k div 20"), 1, "appA", 1L)
+    TableLog.commit(mkDf(999L until 1009L), root, expr("k div 20"), 1, txnTag = Some("appA:1"))
     assert(TableLog.currentVersion(root) == head && rows(TableLog.read(spark, root)) == before)
   }
 
@@ -707,8 +842,8 @@ class TableLogSpec extends AnyFunSuite {
     // the CoW twin DID rewrite its hit files
     assert(TableLog.versionDelta(rootC, vC)._2.nonEmpty)
     // point reads honor the vector: a dv-deleted key vanishes
-    assert(TableLog.readPoint(spark, rootM, "k", 5L).count() == 0L)
-    assert(TableLog.readPoint(spark, rootM, "k", 7L)
+    assert(TableLog.read(spark, rootM, filters = Seq(EqualTo("k", 5L))).count() == 0L)
+    assert(TableLog.read(spark, rootM, filters = Seq(EqualTo("k", 7L)))
       .collect().map(_.getLong(1)).toSeq == Seq(169L))
     // change feed: dv growth = row-exact deletes of the OLD values
     val feed = TableLog.readChangeFeed(spark, rootM, vM, vM)
@@ -1048,8 +1183,8 @@ class TableLogSpec extends AnyFunSuite {
   test("restore: head rolls back bit-identically, history intact, txns carried, vacuum line loud") {
     val root = freshRoot("restore")
     TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 4, "overwrite")
-    TableLog.commitTxn(mkDf(100L until 140L), root, expr("k div 25"),
-      numFiles = 2, appId = "app", txn = 0L)
+    TableLog.commit(mkDf(100L until 140L), root, expr("k div 25"),
+      numFiles = 2, txnTag = Some("app:0"))
     TableLog.commit(mkDf(140L until 160L), root, expr("k div 25"), 1, "append")
     val v3 = TableLog.restore(root, 0L)
     assert(v3 == 3L && TableLog.currentVersion(root) == 3L)
@@ -1063,8 +1198,8 @@ class TableLogSpec extends AnyFunSuite {
     // a replay of batch 0 after the rollback is still a no-op
     assert(TableLog.lastTxn(root, "app") == 0L)
     val before = rows(TableLog.read(spark, root))
-    TableLog.commitTxn(mkDf(100L until 140L), root, expr("k div 25"),
-      numFiles = 2, appId = "app", txn = 0L)
+    TableLog.commit(mkDf(100L until 140L), root, expr("k div 25"),
+      numFiles = 2, txnTag = Some("app:0"))
     assert(TableLog.currentVersion(root) == 3L &&
       rows(TableLog.read(spark, root)) == before)
     // the change feed sees the restore as pure deletes of the diff
@@ -1117,7 +1252,7 @@ class TableLogSpec extends AnyFunSuite {
     // round-12 advice: mergeMor(txnTag=...) stamped unconditionally —
     // a direct call with a stale batch id double-applied the changes
     // AND regressed the high-water mark. Now commit and mergeMor both
-    // carry commitTxn's guard internally.
+    // carry the txn high-water guard internally.
     val root = freshRoot("tagguard")
     TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 4, "overwrite")
     val ch = Seq((7L, 1L, "U", 777L)).toDF("k", "ver", "op", "new_cents")
@@ -1270,7 +1405,7 @@ class TableLogSpec extends AnyFunSuite {
     // zone int32 and int64 identically as longs)
     val (sel, total) = TableLog.planFiles(root, "k", 0L, 24L)
     assert(sel.nonEmpty && sel.size < total)
-    assert(rows(TableLog.readRange(spark, root, "k", 0L, 24L)) ==
+    assert(rows(TableLog.read(spark, root, filters = between("k", 0L, 24L))) ==
       rows(mkDf(0L until 25L)))
     // WITHOUT evolve, a widened batch is still drift — loud
     intercept[IllegalArgumentException] {
@@ -1418,7 +1553,7 @@ class TableLogSpec extends AnyFunSuite {
       (0L until 500L).map(_ * 10 + 1).sum)
     // zone probes translate logical→physical: range pruning by the
     // NEW name still prunes (zones were written under 'cents')
-    val (sel, total) = TableLog.planFilesMulti(root, Seq(("price", 1L, 500L)))
+    val (sel, total) = TableLog.planFiles(root, "price", 1L, 500L)
     assert(sel.size < total, s"rename must not break pruning: ${sel.size}/$total")
     // SQL pushdown under the new name: value-exact
     assert(spark.read.format("graftlog").option("path", root).load()
@@ -1548,7 +1683,7 @@ class TableLogSpec extends AnyFunSuite {
     val root = freshRoot("bloomscheme")
     val docs = (0L until 400L).map(k => (k, s"$k", k * 10 + 1))
       .toDF("k", "sk", "cents")
-    TableLog.commitIndexed(docs, root, expr("k div 100"), 4, "overwrite",
+    TableLog.commit(docs, root, expr("k div 100"), 4, "overwrite",
       bloomCols = Seq("sk"))
     val m = TableLog.readManifest(root, 0L)
     assert(m.files.forall(f => f.blooms.contains("sk") && !f.strBlooms("sk")),
@@ -1556,7 +1691,7 @@ class TableLogSpec extends AnyFunSuite {
     // every string point probe still finds its row (pre-fix: the
     // mis-keyed probe returned guaranteed-empty with no error)
     (0L until 400L by 37L).foreach { k =>
-      val got = TableLog.readPointStr(spark, root, "sk", s"$k")
+      val got = TableLog.read(spark, root, filters = Seq(EqualTo("sk", s"$k")))
         .select("k").collect().map(_.getLong(0)).toSeq
       assert(got == Seq(k), s"string probe over a long bloom lost key $k")
     }
@@ -1567,7 +1702,7 @@ class TableLogSpec extends AnyFunSuite {
     // and the mirror: a STRING-built bloom is tagged, survives the
     // manifest roundtrip, and the LONG probe path refuses to probe it
     val root2 = freshRoot("bloomscheme2")
-    TableLog.commitIndexed(docs, root2, expr("k div 100"), 4, "overwrite",
+    TableLog.commit(docs, root2, expr("k div 100"), 4, "overwrite",
       bloomStrCols = Seq("sk"))
     val m2 = TableLog.readManifest(root2, 0L)
     assert(m2.files.forall(_.strBlooms("sk")),
@@ -1581,26 +1716,25 @@ class TableLogSpec extends AnyFunSuite {
     // prune a point probe; the bloom must
     val docs = (0L until 800L).map(k => (k, s"u$k", k * 10 + 1))
       .toDF("k", "sk", "cents")
-    TableLog.commitIndexed(docs, root, expr("k div 100"), 8, "overwrite",
+    TableLog.commit(docs, root, expr("k div 100"), 8, "overwrite",
       bloomStrCols = Seq("sk"))
     val m = TableLog.readManifest(root, 0L)
     assert(m.files.forall(_.blooms.contains("sk")))
     // NEVER false-negative: every real key's plan keeps its file and
     // the pruned read returns exactly its row
     (0L until 800L by 97L).foreach { k =>
-      val got = TableLog.readPointStr(spark, root, "sk", s"u$k")
+      val got = TableLog.read(spark, root, filters = Seq(EqualTo("sk", s"u$k")))
         .select("k", "cents").collect()
       assert(got.toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
         Seq((k, k * 10 + 1)), s"lost key u$k")
     }
     // an in-zone miss prunes STRICTLY below the zone-only plan (the
     // bloom's contribution) and reads nothing
-    val (zoneOnly, total) = TableLog.planFilesStr(root,
-      Seq(("sk", "u33a", "u33a")))
-    val (bloomed, _) = TableLog.planFilesPointStr(root, "sk", "u33a")
+    val (zoneOnly, total) = TableLog.plan(root, between("sk", "u33a", "u33a"))
+    val (bloomed, _) = TableLog.plan(root, Seq(EqualTo("sk", "u33a")))
     assert(total == 8 && bloomed.size < zoneOnly.size,
       s"bloom must out-prune zones: ${bloomed.size} !< ${zoneOnly.size}")
-    assert(TableLog.readPointStr(spark, root, "sk", "u33a").count() == 0L)
+    assert(TableLog.read(spark, root, filters = Seq(EqualTo("sk", "u33a"))).count() == 0L)
     // the SQL surface probes the same bloom: plan-level file counts
     spark.read.format("graftlog").option("path", root).load()
       .filter(col("sk") === "u33a").count()
@@ -1628,10 +1762,10 @@ class TableLogSpec extends AnyFunSuite {
       "overwrite")
     // ["blog","crawl"] keeps exactly 2 of 4 — arxiv sorts below the
     // range, docs above it
-    val (sel, total) = TableLog.planFilesStr(root, Seq(("source", "blog", "crawl")))
+    val (sel, total) = TableLog.plan(root, between("source", "blog", "crawl"))
     assert(total == 4 && sel.size == 2, s"expected 2/4 files, got ${sel.size}/$total")
     // the pruned read equals the full-table filter, value-for-value
-    val pruned = TableLog.readRangeStr(spark, root, Seq(("source", "blog", "crawl")))
+    val pruned = TableLog.read(spark, root, filters = between("source", "blog", "crawl"))
     assert(pruned.count() == 200L)
     assert(pruned.agg(sum("cents")).collect()(0).getLong(0) ==
       docs.filter(col("source").isin("blog", "crawl"))
@@ -1682,8 +1816,8 @@ class TableLogSpec extends AnyFunSuite {
     val mt = TableLog.readManifest(rootT, 0L)
     assert(mt.files.head.sMaxTrunc("source") &&
       mt.files.head.sMax("source") == "12345678901234")
-    assert(TableLog.readRangeStr(spark, rootT,
-      Seq(("source", "12345678901234Z", "~"))).count() == 2L,
+    assert(TableLog.read(spark, rootT,
+      filters = between("source", "12345678901234Z", "~")).count() == 2L,
       "range read anchored above the stored prefix must not lose rows")
     // an UN-truncated max excludes exactly
     val e2 = e.copy(sMaxTrunc = Set.empty)
